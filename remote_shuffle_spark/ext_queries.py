@@ -6652,44 +6652,27 @@ def ext_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Cached z-clustered copy of events on (user_id, event_id % 1024)
-    — same cache/invalidate discipline as latedrop.late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
+    """Cached z-clustered copy of events on (user_id, event_id % 1024),
+    built once per events snapshot (shuffle_policy.build_once)."""
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.plans.zorder import ZDim, write_zordered
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"zorder2|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_zorder_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.pmod("event_id", F.lit(1024)).alias("bucket")
-    )
-    # integer dims with power-of-two bounds: (v-0)/65536*65536 is IEEE-exact,
-    # so bucket id == value and the Morton code is exact integer interleave
-    write_zordered(
-        ev,
-        tmp,
-        [ZDim("user_id", 0, 65536), ZDim("bucket", 0, 65536)],
-        bits=16,
-        num_partitions=16,
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", F.pmod("event_id", F.lit(1024)).alias("bucket")
+        )
+        # integer dims with power-of-two bounds: (v-0)/65536*65536 is IEEE-exact,
+        # so bucket id == value and the Morton code is exact integer interleave
+        write_zordered(
+            ev,
+            tmp,
+            [ZDim("user_id", 0, 65536), ZDim("bucket", 0, 65536)],
+            bits=16,
+            num_partitions=16,
+        )
+
+    return build_once("zorder", [table_path(sf_dir, "events")], (), build)
 
 
 def _zorder_oracle_sql() -> str:
@@ -9119,62 +9102,29 @@ def ext_dedup_ladder_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached PERSISTED MinHash band index of the incremental-dedup
     corpus split (documents with doc_id % 10 != 7) — built once per
-    documents snapshot (cache keyed by the source file's stat, the
-    _zorder_events_dir discipline), written bkey-sorted by
-    operators/dedup.py:write_minhash_band_index.  This is the
+    documents snapshot (shuffle_policy.build_once), written bkey-sorted
+    by operators/dedup.py:write_minhash_band_index.  This is the
     materialized operator state the reference's persisted-map-output
     thesis is about: later ingest jobs CONSUME it instead of
     recomputing the corpus."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from remote_shuffle_spark.operators.dedup import (
         minhash_band_index,
         write_minhash_band_index,
     )
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"mhidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_mhidx_{key}")
+    def build(tmp: str) -> None:
+        corpus = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 10 != 7)
+            .select("doc_id", "text")
+        )
+        write_minhash_band_index(
+            minhash_band_index(corpus, "doc_id", "text"), tmp
+        )
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    if _complete(out):
-        return out
-    # an INCOMPLETE cache dir (e.g. a /tmp cleaner pruned _SUCCESS or a
-    # part file by atime) must never be served NOR allowed to block the
-    # rename of a fresh build (self-review r11: the old except branch
-    # rmtree'd the GOOD build and returned the broken dir)
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 != 7)
-        .select("doc_id", "text")
-    )
-    write_minhash_band_index(
-        minhash_band_index(corpus, "doc_id", "text"), tmp
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # a concurrent builder won the rename: serve the winner only if
-        # it is complete, else serve our fresh build from its tmp path
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    return build_once("mhidx", [table_path(sf_dir, "documents")], (), build)
 
 
 def _incremental_minhash_oracle_sql() -> str:
@@ -10814,47 +10764,16 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached PERSISTED IVFADC index of the embeddings table
     (operators/similarity.py:ivf_pq_write_index — encoded corpus
     partitionBy(cell) + model tables), built once per embeddings
-    snapshot (stat-keyed cache, the _zorder_events_dir discipline)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
+    snapshot (shuffle_policy.build_once)."""
     from remote_shuffle_spark.operators.similarity import ivf_pq_write_index
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "embeddings")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"ivfidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_ivfidx_{key}")
+    def build(tmp: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and all(
-            os.path.exists(os.path.join(d, sub, "_SUCCESS"))
-            for sub in ("codes", "centroids", "codebook")
-        )
-
-    if _complete(out):
-        return out
-    # incomplete cache dirs are rebuilt, never served or allowed to block
-    # the fresh build's rename (self-review r11, same as _minhash_index_dir)
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    emb = load_table(spark, sf_dir, "embeddings")
-    ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    return build_once("ivfidx", [table_path(sf_dir, "embeddings")], (), build)
 
 
 @declared(
@@ -14548,46 +14467,20 @@ _INVIDX_LOOKUP_SQL = f"""
 def _invidx_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached PERSISTED inverted index of the documents table
     (operators/text.py:write_inverted_index — postings partitionBy
-    md5-bucket), built once per documents snapshot (stat-keyed cache,
-    the _ivf_index_dir discipline)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
+    md5-bucket), built once per documents snapshot
+    (shuffle_policy.build_once)."""
     from remote_shuffle_spark.operators.text import (
         inverted_postings,
         write_inverted_index,
     )
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"invidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_invidx_{key}")
+    def build(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        write_inverted_index(inverted_postings(docs, "doc_id", "text"), tmp)
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    if _complete(out):
-        return out
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    docs = load_table(spark, sf_dir, "documents")
-    write_inverted_index(inverted_postings(docs, "doc_id", "text"), tmp)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    return build_once("invidx", [table_path(sf_dir, "documents")], (), build)
 
 
 @declared(

@@ -146,25 +146,6 @@ def simhash64(toks: Column) -> Column:
     return result
 
 
-def simhash_chunks(sim: Column, num_chunks: int = 4) -> list[Column]:
-    """Split a 64-bit simhash into ``num_chunks`` equal bit chunks.
-
-    Pigeonhole: two hashes within hamming distance < num_chunks share at
-    least one identical chunk → chunks are LSH buckets for hamming space.
-    """
-    width = 64 // num_chunks
-    mask = (1 << width) - 1
-    return [
-        F.shiftrightunsigned(sim, i * width).bitwiseAND(F.lit(mask)).alias(f"chunk{i}")
-        for i in range(num_chunks)
-    ]
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def rolling_fingerprint(toks: Column) -> Column:
     """Order-sensitive polynomial rolling hash of a token stream (bigint).
 

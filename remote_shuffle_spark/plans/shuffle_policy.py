@@ -12,6 +12,9 @@ are:
 - :func:`checkpoint_to` — materialize a stage boundary to durable storage
   (parquet's commit protocol is the same tmp+rename+dedup dance) and read
   it back, cutting lineage so retries never climb past it.
+- :func:`build_once` — the same commit for derived directories cached
+  across queries (index builds, micro-batch splits): tmp dir, manifest,
+  rename, and the existing build served while it stays complete.
 - :func:`salted_aggregate` — two-phase aggregation for skewed keys (the
   engine-level answer to the DAOS writer's size-sampled spill-first
   policy, MapPartitionsWriter.scala:46-57,340-355).
@@ -23,11 +26,15 @@ are:
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
+import tempfile
 import threading
+import uuid
 from collections import defaultdict
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,33 +99,38 @@ def _local_dir(spark: SparkSession, path: str) -> str:
     return path
 
 
+def _data_paths(d: str) -> Iterator[str]:
+    """Data files under ``d``, recursing into partition directories.
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums,
+    the manifest itself) are skipped at every level, as Spark's readers do."""
+    for root, dirs, names in os.walk(d):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        for name in names:
+            if not name.startswith(("_", ".")):
+                yield os.path.join(root, name)
+
+
 def _list_data_files(d: str) -> dict[str, int]:
-    return {
-        name: os.path.getsize(os.path.join(d, name))
-        for name in os.listdir(d)
-        if not name.startswith(("_", "."))
-    }
+    return {os.path.relpath(p, d): os.path.getsize(p) for p in _data_paths(d)}
 
 
-def _write_manifest(spark: SparkSession, path: str) -> None:
-    """Record the committed data files (name → size) so any later reader
-    can tell a lost block from a legitimately smaller dataset.  The shuffle
-    analog is the reference's index file: data without its index entry does
-    not exist, and an index entry without its data is an error, never an
-    empty block."""
-    import json
-
-    d = _local_dir(spark, path)
-    files = _list_data_files(d)
+def _commit_manifest(d: str) -> None:
+    """Record the data files under ``d`` (relative name → size) so any later
+    reader can tell a lost block from a legitimately smaller dataset.  The
+    shuffle analog is the reference's index file: data without its index
+    entry does not exist, and an index entry without its data is an error,
+    never an empty block."""
     tmp = os.path.join(d, f".{MANIFEST_NAME}.tmp")
     with open(tmp, "w") as fh:
-        json.dump({"files": files}, fh)
+        json.dump({"files": _list_data_files(d)}, fh)
     os.replace(tmp, os.path.join(d, MANIFEST_NAME))  # atomic, like the index commit
 
 
-def _verify_manifest(spark: SparkSession, path: str) -> None:
-    import json
+def _write_manifest(spark: SparkSession, path: str) -> None:
+    _commit_manifest(_local_dir(spark, path))
 
+
+def _verify_manifest(spark: SparkSession, path: str) -> None:
     d = _local_dir(spark, path)
     mfile = os.path.join(d, MANIFEST_NAME)
     if not os.path.exists(mfile):
@@ -135,6 +147,56 @@ def _verify_manifest(spark: SparkSession, path: str) -> None:
             f"checkpoint at {path} lost blocks: missing={missing} resized={resized}; "
             "refusing to return a silently-partial result — rebuild the checkpoint"
         )
+
+
+def _is_complete(d: str) -> bool:
+    """``d`` holds exactly the data files its manifest recorded."""
+    try:
+        with open(os.path.join(d, MANIFEST_NAME)) as fh:
+            files = json.load(fh)["files"]
+    except (OSError, ValueError, KeyError):
+        return False
+    return files == _list_data_files(d)
+
+
+def build_once(
+    tag: str, sources: Sequence[str], params: object, build: Callable[[str], None]
+) -> str:
+    """Return a directory built by ``build`` once per (``tag``, ``params``,
+    source snapshot) under the temp dir, reused while it stays complete.
+
+    The key is each source's realpath plus the (name, size, mtime_ns) of
+    its data files (a directory source is keyed on every data file in
+    it), so a fixture regenerated in place gets a fresh build instead of
+    stale rows.  ``build(tmp)`` writes into the new path ``tmp``; the
+    manifest is written last and ``tmp`` is renamed into place — the
+    tmp+rename+dedup commit of writeIndexFileAndCommit.  The manifest is
+    the completeness marker, re-verified on every hit: a directory that
+    lost or resized a data file (a /tmp cleaner pruning by atime) is
+    removed and rebuilt, never served.  A caller that loses the rename
+    race serves the winner if it is complete, else its own ``tmp``.
+    """
+    ident: list[object] = [tag, repr(params)]
+    for real in map(os.path.realpath, sources):
+        files = sorted(_data_paths(real)) if os.path.isdir(real) else [real]
+        ident.append(real)
+        ident += [(f, st.st_size, st.st_mtime_ns) for f in files for st in (os.stat(f),)]
+    key = hashlib.sha1(repr(ident).encode()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"rss_{tag}_{key}")
+    if _is_complete(out):
+        return out
+    # an incomplete dir must neither be served nor block the rename below
+    shutil.rmtree(out, ignore_errors=True)
+    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
+    build(tmp)
+    _commit_manifest(tmp)
+    try:
+        os.rename(tmp, out)
+    except OSError:  # a concurrent builder committed first
+        if not _is_complete(out):
+            return tmp
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 def checkpoint_to(df: DataFrame, path: str, *, format: str = "parquet") -> DataFrame:
@@ -333,15 +395,8 @@ def write_bucketed(
 def unique_table_name(prefix: str) -> str:
     """uuid-suffixed table name so concurrent sessions sharing one
     warehouse dir can't race :func:`write_bucketed`'s drop+rmtree."""
-    import uuid
-
     return f"{prefix}_{uuid.uuid4().hex[:12]}"
 
 
 def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
-
-
-def broadcast_if_small(df: DataFrame, *, force: bool = False) -> DataFrame | Column:
-    """Mark a dimension side for broadcast (exchange elimination)."""
-    return F.broadcast(df) if force else df

@@ -22,6 +22,10 @@ Determinism rules (FIXTURES.md):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -52,362 +56,49 @@ def declared(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# name -> latest round whose external DuckDB gate row was fully green
-# (rows+schema+hash).  The driver's correctness gate checks the FIRST 50
-# registry entries positionally, so `queries()` orders by this value
+# Repo root: the committed CORRECTNESS_r*.json gate results live there.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _gate_rows() -> tuple[dict[str, int], dict[str, int], dict[str, int]]:
+    """(latest green round, latest checked round, latest FAILED round) per
+    name, read from every committed CORRECTNESS_r*.json.  A row is green
+    when rows, schema and hash all matched the external DuckDB gate."""
+    green: dict[str, int] = {}
+    checked: dict[str, int] = {}
+    failed: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        rnd = int(m.group(1)) if m else 0
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            checked[name] = max(checked.get(name, 0), rnd)
+            ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+            if ok:
+                green[name] = max(green.get(name, 0), rnd)
+            else:
+                failed[name] = max(failed.get(name, 0), rnd)
+    return green, checked, failed
+
+
+# The driver's correctness gate checks the FIRST 50 registry entries
+# positionally, so `queries()` orders by the latest fully-green gate round
 # ascending: never-verified queries (implicit round 0) come first, then
 # the STALEST-verified rows — every round the gate re-checks the 50
 # queries whose last hard verification is oldest, so a regression in a
-# long-ago-verified query cannot sit undetected indefinitely.
-# After each round's gate runs, refresh this dict
-# (scripts/update_driver_verified.py prints the literal).
-DRIVER_VERIFIED_ROUND: dict[str, int] = {
-    "ext_abtest_zscore": 11,
-    "ext_ann_filtered": 10,
-    "ext_apply_in_arrow": 8,
-    "ext_approx_top_k": 14,
-    "ext_asof_join": 13,
-    "ext_asof_join_forward": 12,
-    "ext_asof_join_nearest": 12,
-    "ext_audio_metadata": 14,
-    "ext_autocorr_lag1": 12,
-    "ext_band_index_stats": 11,
-    "ext_bfs_levels": 13,
-    "ext_bigram_counts": 9,
-    "ext_bigram_lm_quality": 9,
-    "ext_bitmap_intersect": 11,
-    "ext_blocking_quality": 11,
-    "ext_bloom_anti_join": 14,
-    "ext_bloom_semi_join": 14,
-    "ext_bm25_topk": 9,
-    "ext_bootstrap_ci": 14,
-    "ext_bootstrap_ci_grouped": 14,
-    "ext_bpe_apply": 9,
-    "ext_bpe_tokens": 14,
-    "ext_bpe_train": 8,
-    "ext_bucketed_join": 13,
-    "ext_burst_detection": 10,
-    "ext_cascade_delete": 11,
-    "ext_char_entropy": 9,
-    "ext_chi_square": 9,
-    "ext_chunk_overlap": 8,
-    "ext_chunk_sequences": 13,
-    "ext_cms_freq": 11,
-    "ext_cohort_retention": 8,
-    "ext_collation": 14,
-    "ext_compaction": 9,
-    "ext_contamination_report": 14,
-    "ext_corpus_prep_pipeline": 12,
-    "ext_corr_matrix": 9,
-    "ext_cumulative_crossover": 8,
-    "ext_curation_pipeline": 14,
-    "ext_cusum_changepoint": 11,
-    "ext_data_quality_audit": 9,
-    "ext_dataset_fingerprint": 11,
-    "ext_dataset_mixture": 13,
-    "ext_decontaminate": 9,
-    "ext_decontaminate_semantic": 14,
-    "ext_decontaminate_spans": 14,
-    "ext_dedup_exact": 13,
-    "ext_dedup_groups": 14,
-    "ext_dedup_incremental": 13,
-    "ext_dedup_incremental_bucketed": 11,
-    "ext_dedup_incremental_minhash": 11,
-    "ext_dedup_index_refresh": 11,
-    "ext_dedup_keep_best": 14,
-    "ext_dedup_ladder": 9,
-    "ext_dedup_ladder_full": 10,
-    "ext_dedup_minhash": 14,
-    "ext_dedup_paragraph": 8,
-    "ext_dedup_prefix_blocks": 13,
-    "ext_dedup_rate_estimate": 11,
-    "ext_dedup_simhash": 14,
-    "ext_dedup_substring": 9,
-    "ext_degree_assortativity": 11,
-    "ext_doc_embedding_join": 14,
-    "ext_doc_histogram": 14,
-    "ext_doc_length_percentiles": 13,
-    "ext_dsir_weights": 10,
-    "ext_embedding_neardup": 14,
-    "ext_event_debounce": 9,
-    "ext_event_runs": 9,
-    "ext_ewma_forecast": 11,
-    "ext_fingerprint": 13,
-    "ext_format_roundtrip_matrix": 11,
-    "ext_freshness_canary": 12,
-    "ext_freshness_weights": 12,
-    "ext_funnel": 9,
-    "ext_fuzzy_join": 9,
-    "ext_fuzzy_join_segments": 13,
-    "ext_fuzzy_join_suffix": 10,
-    "ext_fuzzy_link": 13,
-    "ext_gap_distribution": 11,
-    "ext_gini_index": 11,
-    "ext_global_index": 14,
-    "ext_graph_eccentricity": 11,
-    "ext_hard_negatives": 10,
-    "ext_heavy_hitters": 12,
-    "ext_hll_rolling_distinct": 12,
-    "ext_hll_rollup": 9,
-    "ext_hopping_window": 9,
-    "ext_incremental_agg": 9,
-    "ext_interval_overlap_join": 12,
-    "ext_inverted_index": 9,
-    "ext_inverted_index_compact": 11,
-    "ext_inverted_index_persisted": 11,
-    "ext_inverted_index_stats": 11,
-    "ext_inverted_index_upsert": 11,
-    "ext_ivf_cell_stats": 11,
-    "ext_ivf_index_compact": 11,
-    "ext_ivf_index_upsert": 11,
-    "ext_ivf_pq_indexed": 11,
-    "ext_ivf_pq_recall": 10,
-    "ext_join_size_estimate": 14,
-    "ext_join_strategy_hints": 8,
-    "ext_kcore": 9,
-    "ext_kfold_split": 9,
-    "ext_kll_quantiles": 13,
-    "ext_kll_rolling_quantile": 13,
-    "ext_kmeans_cells": 9,
-    "ext_knn_eval": 10,
-    "ext_knn_join": 13,
-    "ext_knn_join_lsh": 14,
-    "ext_label_centroids": 14,
-    "ext_label_entropy": 9,
-    "ext_label_propagation": 8,
-    "ext_lang_budget_select": 14,
-    "ext_lang_id": 13,
-    "ext_langid_confusion": 11,
-    "ext_last_touch_attribution": 11,
-    "ext_length_percentile_cut": 11,
-    "ext_line_cleaning": 10,
-    "ext_link_prediction": 11,
-    "ext_locf_resample": 11,
-    "ext_lorenz_topshare": 13,
-    "ext_ltv_triangle": 11,
-    "ext_malformed_quarantine": 11,
-    "ext_market_basket": 8,
-    "ext_market_basket_triples": 9,
-    "ext_median_mad_outliers": 11,
-    "ext_metadata_columns": 8,
-    "ext_minhash_estimate": 11,
-    "ext_mixture_temperature": 8,
-    "ext_mmr_select": 10,
-    "ext_multimodal_decode": 13,
-    "ext_multimodal_features": 8,
-    "ext_multimodal_frames": 8,
-    "ext_ngram_jaccard": 13,
-    "ext_ngram_novelty": 10,
-    "ext_observe_metrics": 11,
-    "ext_oov_rate": 11,
-    "ext_out_of_order_audit": 11,
-    "ext_pack_greedy": 9,
-    "ext_pagerank": 13,
-    "ext_pagerank_directed": 14,
-    "ext_pandas_udaf": 8,
-    "ext_parameterized_sql": 14,
-    "ext_pareto_frontier": 11,
-    "ext_per_key_sample": 9,
-    "ext_pii_scrub": 14,
-    "ext_pmi_collocations": 10,
-    "ext_pq_recall": 9,
-    "ext_python_datasource": 13,
-    "ext_python_datasource_write": 8,
-    "ext_quality_classifier": 8,
-    "ext_quality_features": 14,
-    "ext_quantile_bins": 9,
-    "ext_quantized_recall": 8,
-    "ext_range_join": 13,
-    "ext_rare_token_docs": 11,
-    "ext_recursive_cte": 13,
-    "ext_repetition": 14,
-    "ext_rfm_segments": 11,
-    "ext_rolling_time_window": 9,
-    "ext_rollup_topk": 8,
-    "ext_salted_agg": 8,
-    "ext_salted_join": 12,
-    "ext_scalar_subquery_fanout": 14,
-    "ext_scd2": 14,
-    "ext_scd2_lookup": 9,
-    "ext_schema_evolution": 10,
-    "ext_semantic_dedup": 9,
-    "ext_session_funnel": 8,
-    "ext_session_paths": 11,
-    "ext_session_window_dynamic": 10,
-    "ext_session_window_native": 13,
-    "ext_sessionize": 14,
-    "ext_shard_assignment": 9,
-    "ext_similarity_ivf": 14,
-    "ext_similarity_lsh": 12,
-    "ext_similarity_topk": 13,
-    "ext_skew_report": 9,
-    "ext_snapshot_diff": 9,
-    "ext_snapshot_drift": 10,
-    "ext_source_overlap_matrix": 11,
-    "ext_span_corruption": 10,
-    "ext_sql_identifier": 8,
-    "ext_sql_pipe": 8,
-    "ext_sql_scripting": 14,
-    "ext_sql_udf": 9,
-    "ext_state_transitions": 11,
-    "ext_statestore_reader": 14,
-    "ext_stratified_sample": 9,
-    "ext_stream_available_now": 14,
-    "ext_stream_cdc_upsert": 9,
-    "ext_stream_content_dedup": 14,
-    "ext_stream_corpus_prep": 9,
-    "ext_stream_dedup": 14,
-    "ext_stream_dedup_within_watermark": 14,
-    "ext_stream_enrich": 9,
-    "ext_stream_full_outer_join": 13,
-    "ext_stream_hopping_window": 13,
-    "ext_stream_incremental_runs": 8,
-    "ext_stream_index_ingest": 11,
-    "ext_stream_ingest_dedup": 11,
-    "ext_stream_late_drop": 12,
-    "ext_stream_observe": 11,
-    "ext_stream_outer_join": 13,
-    "ext_stream_python_datasource": 13,
-    "ext_stream_session_dynamic": 10,
-    "ext_stream_session_window": 13,
-    "ext_stream_sessionize": 14,
-    "ext_stream_stream_join": 9,
-    "ext_stream_tws_available_now": 8,
-    "ext_stream_tws_initial_state": 8,
-    "ext_stream_tws_limiter": 8,
-    "ext_stream_tws_proc_timers": 9,
-    "ext_stream_tws_row_api": 8,
-    "ext_stream_tws_timers": 8,
-    "ext_stream_tws_ttl": 8,
-    "ext_stream_tws_type_counts": 8,
-    "ext_stream_window": 13,
-    "ext_stream_window_filesink": 9,
-    "ext_table_profile": 9,
-    "ext_text_quality": 13,
-    "ext_text_stats": 13,
-    "ext_tf_idf": 13,
-    "ext_theta_distinct": 13,
-    "ext_theta_set_algebra": 13,
-    "ext_time_to_convert": 9,
-    "ext_time_weighted_avg": 11,
-    "ext_token_budget_select": 14,
-    "ext_train_split": 9,
-    "ext_triangle_count": 8,
-    "ext_trimmed_mean": 11,
-    "ext_try_arithmetic": 8,
-    "ext_udtf_polymorphic": 14,
-    "ext_udtf_table_arg": 8,
-    "ext_upsert": 14,
-    "ext_variant_json": 13,
-    "ext_vector_normalize": 14,
-    "ext_video_metadata": 8,
-    "ext_vocab": 13,
-    "ext_weighted_quantiles": 14,
-    "ext_weighted_sample": 9,
-    "ext_window_rank_family": 9,
-    "ext_window_zscore": 9,
-    "ext_winnowing": 8,
-    "ext_winsorized_mean": 14,
-    "ext_xml_roundtrip": 14,
-    "ext_year_over_year_cte": 14,
-    "ext_zorder_key": 9,
-    "ext_zorder_layout": 14,
-    "q01_scan_filter_agg": 10,
-    "q02_repartition": 10,
-    "q03_repartition_empty": 10,
-    "q04_global_sort": 10,
-    "q05_groupby_aqe": 10,
-    "q06_tpch_q1": 10,
-    "q07_groupbykey_collect": 10,
-    "q08_distinct": 10,
-    "q09_count_distinct": 10,
-    "q10_sort_merge_join": 10,
-    "q11_broadcast_join": 10,
-    "q12_semi_join": 10,
-    "q13_anti_join": 10,
-    "q14_multistage": 10,
-    "q15_skew_groupby": 10,
-    "q16_null_keys": 10,
-    "q17_window_topk": 10,
-    "q18_union_distinct": 10,
-    "q19_intersect": 10,
-    "q20_except": 10,
-    "q21_rollup": 10,
-    "q22_pivot": 12,
-    "q23_json_scalar": 10,
-    "q24_date_parts": 10,
-    "q25_cube": 10,
-    "q26_string_funcs": 10,
-    "q27_explode_unnest": 12,
-    "q28_percentiles": 12,
-    "q29_approx_agg": 12,
-    "q30_math_funcs": 12,
-    "q31_window_running": 12,
-    "q32_grouping_sets": 12,
-    "q33_scalar_subquery": 12,
-    "q34_array_funcs": 12,
-    "q35_map_funcs": 12,
-    "q36_case_null_funcs": 12,
-    "q37_regex_funcs": 12,
-    "q38_datetime_arith": 12,
-    "q39_window_misc": 12,
-    "q40_outer_join": 12,
-    "q41_shipping_priority": 12,
-    "q42_regional_revenue": 12,
-    "q43_correlated_scalar": 12,
-    "q44_exists_subquery": 12,
-    "q45_not_exists": 12,
-    "q46_range_frame": 12,
-    "q47_value_window_funcs": 12,
-    "q48_posexplode": 12,
-    "q49_median_mode": 13,
-    "q50_string_agg": 13,
-    "q51_conditional_agg": 14,
-    "q52_levenshtein": 13,
-    "q53_gap_fill": 13,
-    "q54_set_ops_all": 13,
-    "q55_unpivot": 13,
-    "q56_multi_distinct": 13,
-    "q57_null_safe_join": 13,
-    "q58_ignore_nulls_window": 13,
-    "q59_keep_latest": 13,
-    "q60_sql_entry": 13,
-    "q61_lateral_join": 13,
-    "q62_order_priority_exists": 10,
-    "q63_conditional_priority_agg": 10,
-    "q64_customer_order_histogram": 10,
-    "q65_promo_revenue_share": 10,
-    "q66_small_quantity_revenue": 10,
-    "q67_large_volume_orders": 10,
-    "q68_disjunctive_revenue": 10,
-    "q69_idle_customer_balance": 12,
-    "q70_grouping_id": 12,
-    "q71_mom_growth": 12,
-    "q72_union_by_name": 12,
-    "q73_volume_shipping": 12,
-    "q74_market_share": 12,
-    "q75_returned_items": 12,
-    "q76_product_type_revenue": 12,
-    "q77_top_supplier": 12,
-    "q78_waiting_suppliers": 12,
-    "q79_forecast_revenue": 12,
-    "q80_min_cost_supplier": 12,
-    "q81_important_stock": 12,
-    "q82_supplier_cnt_by_part": 12,
-    "q83_promotable_parts": 12,
-}
+# long-ago-verified query cannot sit undetected indefinitely.  Derived at
+# import from the committed gate results, so a new round's file takes
+# effect as soon as it is committed.
+_GREEN, _CHECKED, _FAILED = _gate_rows()
 
-# 0 names whose LATEST gate check failed — forced to the window head
-DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
-})
+# name -> latest round whose external gate row was fully green
+DRIVER_VERIFIED_ROUND: dict[str, int] = _GREEN
 
-# 0 names whose LATEST gate check failed — forced to the window head
-DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
-})
-
-# 0 names whose LATEST gate check failed — forced to the window head
-DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
-})
+# names whose LATEST gate check failed — forced to the window head
+DRIVER_LATEST_FAILED: frozenset[str] = frozenset(
+    n for n, f in _FAILED.items() if f == _CHECKED[n] and _GREEN.get(n, 0) < f
+)
 
 # Derived flat set (kept for tests / external callers).
 DRIVER_VERIFIED: frozenset[str] = frozenset(DRIVER_VERIFIED_ROUND)

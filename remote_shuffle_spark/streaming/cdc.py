@@ -30,7 +30,6 @@ order-aware merge must absorb.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -39,58 +38,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from remote_shuffle_spark.operators.upsert import merge_upsert_ordered
+from remote_shuffle_spark.plans.shuffle_policy import build_once
 from remote_shuffle_spark.sources.tables import table_path
 from remote_shuffle_spark.streaming.source import event_time, stream_session
+from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
 def split_stream_dir(spark: SparkSession, path: str, *, n_splits: int = 4) -> str:
     """Split one parquet file into ``n_splits`` files for the file-stream
     source, so a single-file fixture still exercises multiple
-    micro-batches.  Keyed on the source realpath PLUS its file
-    (name, size, mtime) set — unlike ``source.file_stream_dir``'s
-    symlink (which always resolves to current data) this COPIES the
-    fixture, so a fixture regenerated in place must invalidate the
-    cached split rather than silently replaying stale rows.  Built once,
-    atomically (tmp dir + rename), reused while the source is unchanged."""
-    import hashlib
-
+    micro-batches.  Unlike ``source.file_stream_dir``'s symlink (which
+    always resolves to current data) this COPIES the fixture, so it is
+    built once per source snapshot by shuffle_policy.build_once — a
+    fixture regenerated in place invalidates the cached split rather
+    than silently replaying stale rows."""
     if n_splits < 1:
         raise ValueError(f"n_splits must be >= 1, got {n_splits}")
-    real = os.path.realpath(path)
-    if os.path.isdir(real):
-        stats = sorted(
-            (f, st.st_size, st.st_mtime_ns)
-            for f in os.listdir(real)
-            if not f.startswith((".", "_"))
-            for st in (os.stat(os.path.join(real, f)),)
+
+    def build(tmp: str) -> None:
+        df = spark.read.parquet(path)
+        materialize_split_files(
+            [df.filter(F.pmod(F.col("event_id"), F.lit(n_splits)) == i) for i in range(n_splits)],
+            tmp,
         )
-    else:
-        st = os.stat(real)
-        stats = [(os.path.basename(real), st.st_size, st.st_mtime_ns)]
-    key = hashlib.sha1(f"{real}|{n_splits}|{stats}".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_cdc_split_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    df = spark.read.parquet(real)
-    for i in range(n_splits):
-        part_dir = os.path.join(tmp, f"_part{i}")
-        df.filter(F.pmod(F.col("event_id"), F.lit(n_splits)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        shutil.move(os.path.join(part_dir, src), os.path.join(tmp, f"split_{i}.parquet"))
-        shutil.rmtree(part_dir)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # lost the build race to a concurrent caller — theirs is complete
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return build_once("cdc_split", [path], (n_splits,), build)
 
 
 def _latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:

@@ -72,52 +72,34 @@ def dup_split_dir(
     holds its contiguous (ts, event_id) range plus a second copy of every
     ``dup_every``-th event of that range — so a streaming dedup operator
     has real duplicates to drop in every micro-batch (the plain ordered
-    split has none; deduping it proves only the plumbing).  Cached per
-    (source identity, params), same invalidation rule as
-    latedrop.late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    split has none; deduping it proves only the plumbing).  Built once
+    per (source snapshot, params) by shuffle_policy.build_once."""
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.streaming.latedrop import (
         _ordered_events,
         assign_arrival,
     )
-
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"dup|{real}|{n_splits}|{dup_every}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_dupsplit_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    assigned = assign_arrival(
-        _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=None
-    )
     from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
-    dupes = assigned.filter(F.pmod(F.col("event_id"), F.lit(dup_every)) == 0)
-    with_dupes = assigned.unionAll(dupes)
-    materialize_split_files(
-        [
-            with_dupes.filter(F.col("arrival") == k).select(
-                "event_id", "user_id", "event_type", "ts"
-            )
-            for k in range(n_splits)
-        ],
-        tmp,
+    def build(tmp: str) -> None:
+        assigned = assign_arrival(
+            _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=None
+        )
+        dupes = assigned.filter(F.pmod(F.col("event_id"), F.lit(dup_every)) == 0)
+        with_dupes = assigned.unionAll(dupes)
+        materialize_split_files(
+            [
+                with_dupes.filter(F.col("arrival") == k).select(
+                    "event_id", "user_id", "event_type", "ts"
+                )
+                for k in range(n_splits)
+            ],
+            tmp,
+        )
+
+    return build_once(
+        "dupsplit", [table_path(sf_dir, "events")], (n_splits, dup_every), build
     )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def streaming_distinct_within_watermark(
@@ -171,52 +153,37 @@ def doc_split_dir(spark: SparkSession, sf_dir: str, *, n_splits: int = 4) -> str
     """Documents as a time-ordered micro-batch stream: contiguous doc_id
     ranges per file, synthetic event time ts = epoch + doc_id seconds
     (documents carry no timestamp; a deterministic one makes watermarks
-    usable).  Cached like late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"docsplit|{real}|{n_splits}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_docsplit_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    docs = spark.read.parquet(src).select(
-        "doc_id",
-        "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
-    # boundaries from the ACTUAL doc_id range, not the row count — a
-    # regenerated fixture with 1-based or gapped ids must not lose rows
-    # (range-partitioning by value only misbalances on gaps, never drops)
-    bounds = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()[0]
-    span = int(bounds.hi) - int(bounds.lo) + 1
+    usable).  Built once per (source snapshot, params) by
+    shuffle_policy.build_once."""
+    from remote_shuffle_spark.plans.shuffle_policy import build_once
     from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
-    per = max(1, span // n_splits)
-    frames = []
-    for k in range(n_splits):
-        lo = int(bounds.lo) + k * per
-        hi = int(bounds.lo) + (k + 1) * per if k < n_splits - 1 else int(bounds.hi) + 1
-        frames.append(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
-    materialize_split_files(frames, tmp)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    src = table_path(sf_dir, "documents")
+
+    def build(tmp: str) -> None:
+        docs = spark.read.parquet(src).select(
+            "doc_id",
+            "text",
+            F.timestamp_micros(
+                F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
+            ).alias("ts"),
+        )
+        # boundaries from the ACTUAL doc_id range, not the row count — a
+        # regenerated fixture with 1-based or gapped ids must not lose rows
+        # (range-partitioning by value only misbalances on gaps, never drops)
+        bounds = docs.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).collect()[0]
+        span = int(bounds.hi) - int(bounds.lo) + 1
+        per = max(1, span // n_splits)
+        frames = []
+        for k in range(n_splits):
+            lo = int(bounds.lo) + k * per
+            hi = int(bounds.lo) + (k + 1) * per if k < n_splits - 1 else int(bounds.hi) + 1
+            frames.append(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
+        materialize_split_files(frames, tmp)
+
+    return build_once("docsplit", [src], (n_splits,), build)
 
 
 def streaming_content_dedup(

@@ -35,17 +35,15 @@ the part of watermarking the stream≡batch queries can't exercise.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.plans.shuffle_policy import build_once
 from remote_shuffle_spark.sources.tables import load_table, table_path
 from remote_shuffle_spark.streaming.source import event_time, stream_session
+from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
 def _ordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,41 +114,28 @@ def late_split_dir(
     """Materialize the arrival-ordered split as one parquet file per batch
     with increasing mtimes (the file source's processing order).
     ``late_every=None`` produces a strictly time-ordered split with no
-    late re-delivery (and no trailing late file).  Cached per (source
-    realpath, params, file size+mtime) — a regenerated fixture
-    invalidates the copy (same rule as cdc.split_stream_dir)."""
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"{real}|{n_splits}|{late_every}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_latedrop_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    from remote_shuffle_spark.streaming.splitutil import materialize_split_files
+    late re-delivery (and no trailing late file).  Built once per (source
+    snapshot, params) by shuffle_policy.build_once — a regenerated
+    fixture invalidates the copy."""
 
-    assigned = assign_arrival(
-        _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=late_every
+    def build(tmp: str) -> None:
+        assigned = assign_arrival(
+            _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=late_every
+        )
+        n_files = n_splits if late_every is None else n_splits + 1
+        materialize_split_files(
+            [
+                assigned.filter(F.col("arrival") == k).select(
+                    "event_id", "user_id", "event_type", "ts"
+                )
+                for k in range(n_files)
+            ],
+            tmp,
+        )
+
+    return build_once(
+        "latedrop", [table_path(sf_dir, "events")], (n_splits, late_every), build
     )
-    n_files = n_splits if late_every is None else n_splits + 1
-    materialize_split_files(
-        [
-            assigned.filter(F.col("arrival") == k).select(
-                "event_id", "user_id", "event_type", "ts"
-            )
-            for k in range(n_files)
-        ],
-        tmp,
-    )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return out
 
 
 def windowed_counts_with_late_drop(

@@ -1,14 +1,13 @@
 """Shared micro-batch split-file materializer.
 
-Four sites grew near-identical copies of the same idiom (round-7 review):
-write each logical batch as ONE parquet file named ``split_k.parquet``
+Write each logical batch as ONE parquet file named ``split_k.parquet``
 with strictly increasing mtimes, so Spark's file stream source processes
-them in the intended order with ``maxFilesPerTrigger=1``.  The copies had
-already diverged in robustness (some had ``_SUCCESS`` + atomic-rename
-caching, some neither); this helper is the single place the
-coalesce→move→utime mechanics live.  Cache keying, atomic renames, and
-``_SUCCESS`` markers stay in the callers — they differ legitimately
-(content-addressed caches for fixture splits, throwaway dirs for probes).
+them in the intended order with ``maxFilesPerTrigger=1``.  This helper is
+the single place the coalesce→move→utime mechanics live.  The cached
+fixture splits (late_split_dir, dup_split_dir, doc_split_dir,
+split_stream_dir) call it from inside ``plans.shuffle_policy.build_once``,
+which owns their cache key, manifest and atomic rename; probes call it on
+throwaway dirs.
 """
 
 from __future__ import annotations

@@ -1,41 +1,23 @@
-"""Print the up-to-date DRIVER_VERIFIED_ROUND dict for queries.py.
+"""Print the gate tables queries.py derives from the committed gate results.
 
-Reads every CORRECTNESS_r*.json in the repo root and emits, for each query
-name that passed the external gate (rows+schema+hash all true), the LATEST
-round in which it passed.  Run at round start, paste the output over the
-dict literal in remote_shuffle_spark/queries.py — the registry then rotates
-the stalest-verified queries into the driver's 50-slot window (never-
-verified queries sort first with round 0).
+``remote_shuffle_spark.queries`` reads every CORRECTNESS_r*.json in the
+repo root at import: for each query name that passed the external gate
+(rows+schema+hash all true), the LATEST round in which it passed, and the
+names whose latest check failed.  The registry rotates the stalest-
+verified queries into the driver's 50-slot window (never-verified queries
+sort first with round 0).  This script prints both tables for review.
 
 Usage: python scripts/update_driver_verified.py
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
+import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _gate_rows() -> tuple[dict[str, int], dict[str, int], dict[str, int]]:
-    """(latest green round, latest checked round, latest FAILED round) per name."""
-    green: dict[str, int] = {}
-    checked: dict[str, int] = {}
-    failed: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        for name, row in json.load(open(path)).items():
-            checked[name] = max(checked.get(name, 0), rnd)
-            ok = row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
-            if ok:
-                green[name] = max(green.get(name, 0), rnd)
-            else:
-                failed[name] = max(failed.get(name, 0), rnd)
-    return green, checked, failed
+from remote_shuffle_spark.queries import DRIVER_LATEST_FAILED, _gate_rows
 
 
 def verified_rounds() -> dict[str, int]:
@@ -45,12 +27,9 @@ def verified_rounds() -> dict[str, int]:
 
 def latest_failed_names() -> list[str]:
     """Names whose MOST RECENT gate check was not fully green (err or any
-    mismatch) — these must outrank merely-stale rows for the next gate
-    window, whatever their old green round says."""
-    green, checked, failed = _gate_rows()
-    return sorted(
-        n for n, f in failed.items() if f == checked[n] and green.get(n, 0) < f
-    )
+    mismatch) — these outrank merely-stale rows for the next gate window,
+    whatever their old green round says."""
+    return sorted(DRIVER_LATEST_FAILED)
 
 
 def verified_names() -> list[str]:

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from remote_shuffle_spark.plans.shuffle_policy import (
     CheckpointIntegrityError,
+    _commit_manifest,
+    build_once,
     checkpoint_to,
     read_checkpoint,
 )
@@ -212,3 +214,127 @@ def test_corrupt_block_rebuilds_once_from_lineage(spark, tmp_path, source_dir):
         sp._write_manifest = real_write
     # exactly one retry for this read, not a loop
     assert calls["n"] == 2
+
+
+# --- build_once: the same commit for cached derived directories ----------
+
+
+@pytest.fixture
+def cache_root(tmp_path, monkeypatch):
+    """build_once's cache lives under tempfile.gettempdir(); isolate it."""
+    import tempfile
+
+    root = tmp_path / "cache"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    return root
+
+
+def _counting_build(calls: dict):
+    """A build writing one top-level and one partition-dir data file plus a
+    marker, counting how often it runs."""
+
+    def build(tmp: str) -> None:
+        calls["n"] += 1
+        os.makedirs(os.path.join(tmp, "cell=0"))
+        with open(os.path.join(tmp, "part-0.bin"), "w") as fh:
+            fh.write("alpha")
+        with open(os.path.join(tmp, "cell=0", "part-1.bin"), "w") as fh:
+            fh.write("beta")
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return build
+
+
+def _data_files(d: str) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(r, n), d)
+        for r, _, ns in os.walk(d)
+        for n in ns
+        if not n.startswith(("_", "."))
+    }
+
+
+@pytest.mark.parametrize(
+    "damage", ["lost_top_file", "lost_nested_file", "truncated", "lost_manifest"]
+)
+def test_build_once_rebuilds_incomplete_dir(cache_root, tmp_path, damage):
+    """An out dir that lost or resized a data file, or its manifest, is
+    rebuilt and the rebuild is served — never the damaged dir (the
+    rename onto a non-empty dir would fail, so it must be removed first)."""
+    src = tmp_path / "src.parquet"
+    src.write_text("x")
+    calls = {"n": 0}
+    build = _counting_build(calls)
+    out = build_once("t", [str(src)], (1,), build)
+    assert build_once("t", [str(src)], (1,), build) == out
+    assert calls["n"] == 1  # complete hit: no rebuild
+    full = _data_files(out)
+    assert full == {"part-0.bin", os.path.join("cell=0", "part-1.bin")}
+
+    if damage == "lost_top_file":
+        os.remove(os.path.join(out, "part-0.bin"))
+    elif damage == "lost_nested_file":
+        os.remove(os.path.join(out, "cell=0", "part-1.bin"))
+    elif damage == "truncated":
+        open(os.path.join(out, "part-0.bin"), "w").close()
+    else:
+        os.remove(os.path.join(out, "_rss_manifest.json"))
+
+    again = build_once("t", [str(src)], (1,), build)
+    assert calls["n"] == 2
+    assert again == out
+    assert _data_files(again) == full
+    assert os.path.getsize(os.path.join(again, "part-0.bin")) == len("alpha")
+    assert not glob.glob(f"{out}.tmp.*")
+
+
+def test_build_once_key_follows_source_snapshot_and_params(cache_root, tmp_path):
+    """Touching a file source, or adding a data file to a directory
+    source, yields a new key; so do different params."""
+    src = tmp_path / "src.parquet"
+    src.write_text("x")
+    srcdir = tmp_path / "srcdir"
+    srcdir.mkdir()
+    (srcdir / "part-0.parquet").write_text("y")
+    calls = {"n": 0}
+    build = _counting_build(calls)
+    first = build_once("t", [str(src), str(srcdir)], (1,), build)
+    assert build_once("t", [str(src), str(srcdir)], (2,), build) != first
+
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    touched = build_once("t", [str(src), str(srcdir)], (1,), build)
+    assert touched != first
+
+    (srcdir / "part-1.parquet").write_text("z")
+    grown = build_once("t", [str(src), str(srcdir)], (1,), build)
+    assert grown not in (first, touched)
+    # marker files in a directory source are not part of its snapshot
+    (srcdir / "_SUCCESS").write_text("")
+    assert build_once("t", [str(src), str(srcdir)], (1,), build) == grown
+    assert calls["n"] == 4
+
+
+@pytest.mark.parametrize("winner_complete", [True, False])
+def test_build_once_lost_race_serves_a_complete_dir(cache_root, tmp_path, winner_complete):
+    """A concurrent builder commits ``out`` while this one builds: the
+    loser serves the winner only if it is complete, else its own tmp."""
+    src = tmp_path / "src.parquet"
+    src.write_text("x")
+    inner = _counting_build({"n": 0})
+
+    def racing_build(tmp: str) -> None:
+        out = tmp.rsplit(".tmp.", 1)[0]
+        inner(out)  # the competitor lands first ...
+        if winner_complete:
+            _commit_manifest(out)
+        inner(tmp)  # ... then this build finishes
+
+    got = build_once("t", [str(src)], (), racing_build)
+    out = got.rsplit(".tmp.", 1)[0]
+    assert (got == out) is winner_complete
+    assert _data_files(got) == {"part-0.bin", os.path.join("cell=0", "part-1.bin")}
+    assert os.path.exists(os.path.join(got, "_rss_manifest.json"))
+    if winner_complete:
+        assert not glob.glob(f"{out}.tmp.*")  # the loser's build is dropped

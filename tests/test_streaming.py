@@ -515,6 +515,27 @@ def test_ordered_only_split_is_strictly_time_ordered(spark):
     assert total == _ordered_events(spark, sf).count()  # nothing dropped
 
 
+def test_late_split_cache_recovers_from_lost_files(spark):
+    """A cached split that lost its ``_SUCCESS`` and one split file (a /tmp
+    cleaner pruning by atime) is rebuilt and the rebuild is served: the
+    next call returns every split file with the full row set."""
+    from remote_shuffle_spark.streaming.latedrop import late_split_dir
+
+    sf = "/root/testdata/sf0.001"
+    d = late_split_dir(spark, sf)
+    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+    assert files == [f"split_{k}.parquet" for k in range(5)]
+    rows = spark.read.parquet(d).count()
+
+    if os.path.exists(os.path.join(d, "_SUCCESS")):
+        os.remove(os.path.join(d, "_SUCCESS"))
+    os.remove(os.path.join(d, "split_2.parquet"))
+
+    healed = late_split_dir(spark, sf)
+    assert sorted(f for f in os.listdir(healed) if f.endswith(".parquet")) == files
+    assert spark.read.parquet(healed).count() == rows
+
+
 def test_stream_outer_join_nulls_emitted_both_sides(spark):
     """ext_stream_outer_join / ext_stream_full_outer_join: null rows
     REALLY emit by eviction on both sides (the watermark bit), and the
